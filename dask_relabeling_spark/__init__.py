@@ -6,6 +6,7 @@ Public surface mirrors the reference's entry points
 the large-scale data-pipeline operators (dedup, similarity, text analysis,
 multimodal plumbing) that generalize the same parallel patterns.
 """
+from . import _zipcache  # noqa: F401  (first: see its docstring)
 from .session import get_spark
 from .sources.tiles import TileSet, from_array, from_tiles, to_array, to_tiles
 from .operators.pipeline import (annotate_labeled_tiles, image2geojson,

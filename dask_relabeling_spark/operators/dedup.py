@@ -553,9 +553,7 @@ def prefix_filtered_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
 def _ppjoin_prefix_table(toks, threshold_num: int, threshold_den: int):
     """(id, tok, sz, rk) for each doc's prefix tokens under the global
     (df, tok) order; sz = |doc|, rk = the token's doc-internal position
-    in the global order.  Shared by the operator and the A/B rig
-    (``tools/ppjoin_filter_ab.py``) so measurements can't drift from
-    the shipped stage."""
+    in the global order."""
     from pyspark.sql import Window
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
     wo = Window.partitionBy("id").orderBy("df", "tok")

@@ -260,7 +260,6 @@ def pad_edge_tiles(ts: TileSet) -> TileSet:
             yield pd.DataFrame.from_records(
                 recs, columns=[f.name for f in TILE_FIELDS])
 
-    padded_shape = tuple(g * c for g, c in zip(ts.grid, chunk))
     return ts.with_df(ts.df.mapInPandas(gen, TILE_SCHEMA))
 
 

@@ -12,6 +12,7 @@ query id over the scored stream.
 """
 from __future__ import annotations
 
+import warnings
 from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -534,11 +535,16 @@ _COLLECT_MAX_CENTROIDS = 1024
 _COLLECT_MAX_METADATA_BYTES = 8 * 1024 * 1024
 
 
+_metadata_fallback_warned = False
+
+
 def _stored_metadata_is_small(spark, path: str) -> bool:
     """True when the stored table under ``path`` is small enough to
     collect whole — decided from the FS content summary (driver-side
     metadata, no Spark job).  Unknown/failed lookups answer False:
-    the engine-side selection is the safe default at scale."""
+    the engine-side selection is the safe default at scale.  The first
+    such fallback in a process warns, naming the exception type."""
+    global _metadata_fallback_warned
     try:
         jvm = spark.sparkContext._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -546,7 +552,13 @@ def _stored_metadata_is_small(spark, path: str) -> bool:
             spark.sparkContext._jsc.hadoopConfiguration())
         return (fs.getContentSummary(hpath).getLength()
                 <= _COLLECT_MAX_METADATA_BYTES)
-    except Exception:
+    except Exception as exc:  # e.g. no JVM handle on Spark Connect
+        if not _metadata_fallback_warned:
+            _metadata_fallback_warned = True
+            warnings.warn(
+                "stored-quantizer size lookup failed "
+                f"({type(exc).__name__}); using the engine-side probe "
+                "selection")
         return False
 
 

@@ -21,9 +21,9 @@ from .relational import REGISTRY, finite_or_null, register, t
 _DUCK_H32 = "CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"
 
 # Query-vector convention for every ANN arm: the embedding of the
-# LOWEST vec_id (the same convention as tools/ann_query_probe.py and
-# the oracles' _DUCK_QVEC).  On the testdata the lowest id is 0, so
-# results are unchanged; on a corpus without vec_id 0 the old
+# LOWEST vec_id (the same convention as the oracles' _DUCK_QVEC).
+# On the testdata the lowest id is 0, so results are unchanged; on a
+# corpus without vec_id 0 the old
 # ``vec_id = 0`` filter crashed with a bare TypeError (round-8 ADVICE).
 _DUCK_QVEC = ("(SELECT min(vec_id) FROM embeddings"
               " WHERE len(list_filter(embedding, x -> x IS NULL OR"

@@ -4,6 +4,7 @@ write byte-identical index content to the old two-pass
 ``ivf_cells(df).join(pq_codes(df), "id")`` formulation it replaced."""
 import math
 import tempfile
+import warnings
 
 from pyspark.sql import functions as F
 
@@ -200,3 +201,16 @@ def test_fused_probe_adc_large_quantizer(spark):
                                   n_sub, sub_dim, cb=cbf,
                                   engine_topk=flag)
         assert (p2, t2) == (want_probe, want_tab)
+
+
+def test_stored_metadata_lookup_failure_warns_once(spark, monkeypatch):
+    monkeypatch.setattr(S, "_metadata_fallback_warned", False)
+    path = "noSuchScheme://bucket/index/centroids"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert S._stored_metadata_is_small(spark, path) is False
+        assert S._stored_metadata_is_small(spark, path) is False
+    msgs = [str(w.message) for w in caught
+            if "size lookup failed" in str(w.message)]
+    assert len(msgs) == 1
+    assert "Py4JJavaError" in msgs[0]
